@@ -1,10 +1,12 @@
 package graft.lake
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import scala.util.Try
+import org.apache.spark.sql.types.{DataType, NumericType, StructType}
 
 /** Iceberg-emulation table layer (SURVEY.md §4.6, S9, O9). No Iceberg jar
   * exists in the offline sandbox, so the engine provides the same contract
@@ -13,25 +15,40 @@ import scala.util.Try
   *
   * {{{
   *   <root>/<table>/data/snap-<id>/part-*.parquet   — immutable snapshot data
-  *   <root>/<table>/_meta/snap-<id>.json            — manifest: rows, stats
-  *   <root>/_lineage/                               — per-stage metrics rows
-  *   <root>/_checkpoints/                           — completed-stage marks
+  *   <root>/<table>/_meta/snap-<id>.json            — manifest: rows, schema, stats
+  *   <root>/_lineage/<jobId>/<stage>.json           — per-partition rows, JSON lines
+  *   <root>/_checkpoints/<jobId>/<stage>            — completed-stage marks
   * }}}
+  *
+  *  - A snapshot's frame is evaluated once, by its write. Its row count, and
+  *    a stage's lineage rows, come from the written part files' parquet
+  *    footers, read on the driver: each part file is one write task, and its
+  *    name (`part-<partition>-…`) carries the task's partition index.
+  *  - The manifest carries the snapshot's schema (`StructType.json`), so
+  *    reads need no parquet schema-inference job.
+  *  - Lineage is one JSON-lines file per (jobId, stage), rows
+  *    `{"jobId","stage","partitionId","rows"}`, written by the driver and
+  *    replaced when the stage is recorded again. `runStage` writes the
+  *    footer rows with no Spark job; `recordLineage` counts a frame's
+  *    partitions in one job.
   *
   * Capabilities the north_rule names:
   *  - snapshot append + time-travel read (`asOf`),
   *  - per-snapshot min/max column stats → snapshot pruning on read,
-  *  - per-partition lineage metrics (rows/bytes) for every stage,
+  *  - per-partition lineage metrics (rows) for every stage,
   *  - checkpointed, idempotent, resumable stages (`runStage` skips work whose
   *    snapshot already exists — the reference's resume() rescans output dirs,
-  *    batch_geojson2coco.py:40-64).
+  *    batch_geojson2coco.py:40-64); a stage's frame is evaluated once.
   */
 final class Lake(val root: String, spark: SparkSession) {
 
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val mapper = new ObjectMapper()
 
   private def metaDir(table: String) = new Path(s"$root/$table/_meta")
   private def dataDir(table: String, snap: Long) = s"$root/$table/data/snap-$snap"
+  private def lineageFile(jobId: String, stage: String) =
+    new Path(s"$root/_lineage/$jobId/$stage.json")
 
   // ---------- snapshots ----------
 
@@ -44,32 +61,58 @@ final class Lake(val root: String, spark: SparkSession) {
       }.sorted.toSeq
   }
 
-  /** Append `df` as a new immutable snapshot; records row count and min/max
-    * stats for `statsCols` in the manifest. Returns the snapshot id. */
-  def writeSnapshot(df: DataFrame, table: String, statsCols: Seq[String] = Seq.empty): Long = {
+  /** Append `df` as a new immutable snapshot; records row count, schema and
+    * min/max stats for `statsCols` in the manifest. Returns the snapshot id. */
+  def writeSnapshot(df: DataFrame, table: String, statsCols: Seq[String] = Seq.empty): Long =
+    append(df, table, statsCols)._1
+
+  /** [[writeSnapshot]], also returning the rows per write partition. */
+  private def append(df: DataFrame, table: String,
+                     statsCols: Seq[String]): (Long, Seq[(Int, Long)]) = {
     val snap = snapshotIds(table).lastOption.getOrElse(-1L) + 1
     val dir = dataDir(table, snap)
     df.write.mode("errorifexists").parquet(dir)
-    val written = spark.read.parquet(dir)
-    val rows = written.count()
+    val perPartition = footerRows(dir)
     // numeric stats are stored as JSON numbers and compared numerically at
     // prune time — a stringified compare would order "9" > "10" and
     // incorrectly skip matching snapshots (silently missing rows)
-    val stats = statsCols.flatMap { c =>
-      val numeric = written.schema(c).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]
-      val r = written.agg(min(col(c)).cast("string"), max(col(c)).cast("string")).head()
-      if (r.isNullAt(0)) None else Some((c, r.getString(0), r.getString(1), numeric))
+    val stats = if (statsCols.isEmpty) Seq.empty else {
+      val r = spark.read.schema(df.schema).parquet(dir).select(statsCols.flatMap(c =>
+        Seq(min(col(c)).cast("string"), max(col(c)).cast("string"))): _*).head()
+      statsCols.zipWithIndex.collect { case (c, i) if !r.isNullAt(2 * i) =>
+        (c, r.getString(2 * i), r.getString(2 * i + 1),
+          df.schema(c).dataType.isInstanceOf[NumericType])
+      }
     }
     val statsJson = stats.map { case (c, lo, hi, numeric) =>
       if (numeric) s""""$c":{"min":$lo,"max":$hi,"num":true}"""
       else s""""$c":{"min":${jstr(lo)},"max":${jstr(hi)},"num":false}"""
     }.mkString("{", ",", "}")
-    val manifest =
-      s"""{"snapshot":$snap,"table":${jstr(table)},"rows":$rows,"stats":$statsJson}"""
-    val out = fs.create(new Path(metaDir(table), s"snap-$snap.json"), false)
-    out.write(manifest.getBytes("UTF-8")); out.close()
-    snap
+    val manifest = s"""{"snapshot":$snap,"table":${jstr(table)},""" +
+      s""""rows":${perPartition.map(_._2).sum},"schema":${df.schema.json},"stats":$statsJson}"""
+    writeText(new Path(metaDir(table), s"snap-$snap.json"), manifest, overwrite = false)
+    (snap, perPartition)
+  }
+
+  /** Rows per write partition of the snapshot at `dir`, summed from the
+    * part files' parquet footers (a partition splits into several files
+    * only under `maxRecordsPerFile`). */
+  private def footerRows(dir: String): Seq[(Int, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val PartFile = """part-(\d+)-.*""".r
+    fs.listStatus(new Path(dir)).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case PartFile(p) =>
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+          try Some((p.toInt, reader.getRecordCount)) finally reader.close()
+        case _ => None
+      }
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
+  }
+
+  private def writeText(path: Path, text: String, overwrite: Boolean): Unit = {
+    val out = fs.create(path, overwrite)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   private def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
@@ -80,19 +123,19 @@ final class Lake(val root: String, spark: SparkSession) {
     new String(bytes, "UTF-8")
   }
 
-  /** Read the table as of snapshot `asOf` (inclusive; default latest).
-    * `prune` is an optional (col, lo, hi) predicate evaluated against the
-    * manifests' min/max stats — snapshots that cannot match are never
-    * scanned (the partition-pruning analog, SURVEY.md §4 J7). */
+  /** Read the table as of snapshot `asOf` (inclusive; default latest) with
+    * the schema of the latest snapshot read. `prune` is an optional
+    * (col, lo, hi) predicate evaluated against the manifests' min/max
+    * stats — snapshots that cannot match are never scanned (the
+    * partition-pruning analog, SURVEY.md §4 J7). */
   def readTable(table: String, asOf: Long = Long.MaxValue,
                 prune: Option[(String, String, String)] = None): DataFrame = {
-    val snaps0 = snapshotIds(table).filter(_ <= asOf)
+    val manifests = snapshotIds(table).filter(_ <= asOf)
+      .map(s => s -> mapper.readTree(manifest(table, s)))
     val snaps = prune match {
-      case None => snaps0
-      case Some((c, lo, hi)) => snaps0.filter { s =>
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = mapper.readTree(manifest(table, s))
-        val stat = if (root.has("stats")) root.get("stats").get(c) else null
+      case None => manifests
+      case Some((c, lo, hi)) => manifests.filter { case (_, m) =>
+        val stat = if (m.has("stats")) m.get("stats").get(c) else null
         if (stat == null) true // no stats for the column → cannot prune
         else if (stat.get("num").asBoolean())
           stat.get("min").asDouble() <= hi.toDouble && stat.get("max").asDouble() >= lo.toDouble
@@ -100,25 +143,46 @@ final class Lake(val root: String, spark: SparkSession) {
       }
     }
     if (snaps.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(snaps.map(dataDir(table, _)): _*)
+    else {
+      // manifests written before the schema was recorded fall back to inference
+      val schema = Option(snaps.last._2.get("schema"))
+        .map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
+      schema.fold(spark.read)(spark.read.schema).parquet(snaps.map(s => dataDir(table, s._1)): _*)
+    }
   }
 
   // ---------- lineage ----------
 
-  /** Append per-partition metrics for a stage (north_rule lineage). */
-  def recordLineage(jobId: String, stage: String, df: DataFrame): Unit = {
-    import spark.implicits._
-    val rowsPerPartition = df
-      .groupBy(spark_partition_id().as("partitionId"))
-      .agg(count(lit(1)).as("rows"))
-      .withColumn("jobId", lit(jobId))
-      .withColumn("stage", lit(stage))
-    rowsPerPartition.write.mode("append").parquet(s"$root/_lineage")
-  }
+  /** Record the per-partition row counts of `df` as the lineage of
+    * (jobId, stage), replacing any earlier record. Evaluates `df` once. */
+  def recordLineage(jobId: String, stage: String, df: DataFrame): Unit =
+    writeLineage(jobId, stage, df.queryExecution.toRdd
+      .mapPartitionsWithIndex((p, it) => Iterator((p, it.size.toLong))).collect().toSeq)
 
-  def lineage(): DataFrame =
-    if (fs.exists(new Path(s"$root/_lineage"))) spark.read.parquet(s"$root/_lineage")
-    else spark.emptyDataFrame
+  private def writeLineage(jobId: String, stage: String, perPartition: Seq[(Int, Long)]): Unit =
+    writeText(lineageFile(jobId, stage), perPartition.map { case (p, n) =>
+      s"""{"jobId":${jstr(jobId)},"stage":${jstr(stage)},"partitionId":$p,"rows":$n}""" + "\n"
+    }.mkString, overwrite = true)
+
+  /** Every recorded lineage row: (jobId, stage, partitionId, rows). */
+  def lineage(): DataFrame = {
+    import spark.implicits._
+    val dir = new Path(s"$root/_lineage")
+    val rows = if (!fs.exists(dir)) Seq.empty else {
+      val files = fs.listFiles(dir, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(_.getName.endsWith(".json")).flatMap { p =>
+          val in = fs.open(p)
+          val text = try org.apache.commons.io.IOUtils.toString(in, "UTF-8") finally in.close()
+          text.split('\n').iterator.filter(_.nonEmpty).map { l =>
+            val n = mapper.readTree(l)
+            (n.get("jobId").asText(), n.get("stage").asText(),
+              n.get("partitionId").asInt(), n.get("rows").asLong())
+          }
+        }.toSeq
+    }
+    rows.toDF("jobId", "stage", "partitionId", "rows")
+  }
 
   // ---------- checkpoint / resume ----------
 
@@ -133,18 +197,17 @@ final class Lake(val root: String, spark: SparkSession) {
 
   /** Idempotent stage execution: if `stage` completed for `jobId`, read its
     * snapshot back instead of recomputing (kill-and-resume equivalence —
-    * O9). The body must be deterministic for exact resume semantics. */
+    * O9). Otherwise the body's frame is written once as the stage's
+    * snapshot, whose footers give the lineage rows, and read back. The
+    * body must be deterministic for exact resume semantics. */
   def runStage(jobId: String, stage: String)(body: => DataFrame): DataFrame = {
     val table = s"$jobId/$stage"
-    if (completedStages(jobId).contains(stage)) {
-      readTable(table)
-    } else {
-      val df = body
-      writeSnapshot(df, table)
-      recordLineage(jobId, stage, df)
+    if (!completedStages(jobId).contains(stage)) {
+      val (_, perPartition) = append(body, table, Seq.empty)
+      writeLineage(jobId, stage, perPartition)
       markComplete(jobId, stage)
-      readTable(table)
     }
+    readTable(table)
   }
 }
 

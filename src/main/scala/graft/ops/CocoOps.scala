@@ -201,12 +201,16 @@ object CocoOps {
     val spark = parts.head.images.sparkSession
     import spark.implicits._
 
-    // per-dataset counts → offsets (counts are tiny metadata; shift columns
-    // keep id assignment fully distributed)
-    val imgCounts = parts.map(_.images.count())
-    val annCounts = parts.map(_.annotations.count())
-    val imgOff = imgCounts.scanLeft(0L)(_ + _)
-    val annOff = annCounts.scanLeft(0L)(_ + _)
+    // per-dataset image and annotation counts → offsets, from one grouped
+    // query (counts are tiny metadata; shift columns keep id assignment
+    // fully distributed)
+    val counts = parts.zipWithIndex.flatMap { case (p, i) =>
+      Seq(p.images.select(lit(i).as("ds"), lit(false).as("ann")),
+        p.annotations.select(lit(i).as("ds"), lit(true).as("ann")))
+    }.reduce(_ union _).groupBy("ds", "ann").count().as[(Int, Boolean, Long)].collect()
+      .map { case (ds, ann, n) => (ds, ann) -> n }.toMap.withDefaultValue(0L)
+    val imgOff = parts.indices.map(i => counts((i, false))).scanLeft(0L)(_ + _)
+    val annOff = parts.indices.map(i => counts((i, true))).scanLeft(0L)(_ + _)
 
     val images = parts.zipWithIndex.map { case (p, i) =>
       p.images.toDF()
@@ -214,22 +218,18 @@ object CocoOps {
         .withColumn("fileName", concat_ws("", lit(s"${i}_"), col("fileName")))
     }.reduce(_ unionByName _).as[CocoImage]
 
-    // categories: dedup by name keeping the first dataset's id ordering
+    // categories (dim-sized) dedup by name on the driver: in (dataset, id)
+    // order, a name's first row gives its supercategory and its new id's rank
     val allCats = parts.zipWithIndex.map { case (p, i) =>
-      p.categories.toDF().withColumn("ds", lit(i))
-    }.reduce(_ unionByName _)
-    val catByName = allCats
-      .groupBy("name").agg(min(struct(col("ds"), col("id"))).as("first"),
-        first(col("supercategory")).as("supercategory"))
-      .withColumn("ds0", col("first.ds")).withColumn("id0", col("first.id"))
-    // dense ids without a global window (categories are usually dim-sized,
-    // but a no-partition row_number still single-partitions and warns)
-    val newCats = Ids.denseId(catByName, "newId", Seq("ds0", "id0"))
-      .withColumn("id", col("newId").cast("int"))
-      .select(col("id"), col("name"), col("supercategory"))
-    val catRemap = allCats.select(col("ds").as("rds"), col("id").as("oldId"), col("name"))
-      .join(newCats.select(col("name"), col("id").as("newCatId")), "name")
-      .select("rds", "oldId", "newCatId")
+      p.categories.toDF().select(lit(i).as("ds"), col("id"), col("name"), col("supercategory"))
+    }.reduce(_ union _).as[(Int, Int, String, String)].collect().sortBy(c => (c._1, c._2))
+    val firsts = allCats.distinctBy(_._3)
+    val newId = firsts.map(_._3).zipWithIndex.toMap
+    val newCats = spark.createDataset(firsts.toSeq.map { case (_, _, name, sup) =>
+      CocoCategory(newId(name), name, sup)
+    })
+    val catRemap = allCats.toSeq.map { case (ds, id, name, _) => (ds, id, newId(name)) }
+      .toDF("rds", "oldId", "newCatId")
 
     val annotations = parts.zipWithIndex.map { case (p, i) =>
       p.annotations.toDF()
@@ -265,6 +265,6 @@ object CocoOps {
       a ++ b ++ mergedLicenses
     }
 
-    CocoTables(images, annotations, newCats.as[CocoCategory], extras)
+    CocoTables(images, annotations, newCats, extras)
   }
 }

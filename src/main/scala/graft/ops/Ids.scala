@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Dense global id assignment without a single-partition window
@@ -69,6 +70,10 @@ object Ids {
       var i = bc.value(p)
       it.map { r => val o = Row.fromSeq(r.toSeq :+ i); i += 1; o }
     }
-    spark.createDataFrame(out, outSchema)
+    // the output keeps the input's size estimate: an RDD frame is otherwise
+    // sized as unknown, which would send a denseId over this output (a
+    // GeoJSON read feeding GeojsonToCoco) to the multi-partition arm and
+    // its sample job, a second run of the whole input
+    Bridge.withSizeOf(spark.createDataFrame(out, outSchema), df)
   }
 }

@@ -13,8 +13,9 @@ import org.apache.spark.sql.Dataset
   * with global id re-indexing — its `--no-workers > 1` path raises
   * NotImplementedError. Here the work list is data: each pair runs as
   * checkpointed Lake stages (skipped when already complete — kill/resume
-  * equivalence), per-stage lineage rows are recorded, and the concat is
-  * [[CocoOps.concat]]'s shift-based re-indexing.
+  * equivalence). Each stage's frame is evaluated once, by its snapshot
+  * write; its per-partition lineage rows come from the written files'
+  * footers. The concat is [[CocoOps.concat]]'s shift-based re-indexing.
   */
 object BatchPipeline {
 

@@ -48,8 +48,9 @@ object GeojsonToCoco {
     }
 
     // categories: first-appearance factorization over featureId order (A1)
-    val catRows = features.groupBy("zoneName").agg(min("featureId").as("first"))
-      .orderBy("first").select("zoneName").as[String].collect()
+    // (one row per class, sorted on the driver)
+    val catRows = features.groupBy("zoneName").agg(min("featureId"))
+      .as[(String, Long)].collect().sortBy(_._2).map(_._1)
     val categories = catRows.zipWithIndex.map { case (name, i) =>
       CocoCategory(i, name.drop(p.trimClass), name.drop(p.trimClass))
     }

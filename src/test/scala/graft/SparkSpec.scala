@@ -23,4 +23,34 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
     s
   }
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Spark jobs started while `f` runs on this thread. A fence job in its
+    * own group, seen by the listener, proves every earlier job event was
+    * delivered (the listener bus is ordered). */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-fence" => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      f
+      sc.setJobGroup(s"$group-fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job not seen")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
 }

@@ -70,13 +70,39 @@ class LakeSpec extends SparkSpec {
   }
 
   test("lineage rows record per-partition counts per stage") {
+    val lake = freshLake()
+    lake.runStage("j", "s")(spark.range(0, 100, 1, 4).toDF("id"))
+    val lin = lake.lineage().where(col("jobId") === "j" && col("stage") === "s")
+      .select("partitionId", "rows").collect().map(r => (r.getInt(0), r.getLong(1)))
+    assert(lin.sorted.toSeq == (0 until 4).map(p => (p, 25L)))
+    // recordLineage over the same frame writes the same rows, in place
+    lake.recordLineage("j", "s", spark.range(0, 100, 1, 4).toDF("id"))
+    assert(lake.lineage().select("partitionId", "rows").collect()
+      .map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq == lin.sorted.toSeq)
+  }
+
+  test("runStage evaluates the body's partitions exactly once") {
     val spark2 = spark
     import spark2.implicits._
     val lake = freshLake()
-    lake.runStage("j", "s")(spark.range(0, 100, 1, 4).toDF("id"))
-    val lin = lake.lineage()
-    assert(lin.where(col("jobId") === "j" && col("stage") === "s")
-      .agg(sum("rows")).head.getLong(0) == 100L)
+    val evaluated = spark.sparkContext.longAccumulator("partitions evaluated")
+    val body = spark.range(0, 100, 1, 4).mapPartitions { it => evaluated.add(1); it }.toDF("id")
+    assert(lake.runStage("j", "s")(body).count() == 100)
+    assert(evaluated.value == 4L)
+  }
+
+  test("manifest carries the row count and schema; a completed stage reads back with no job") {
+    val lake = freshLake()
+    val df = spark.range(0, 10, 1, 2).selectExpr("id", "cast(id as string) as v")
+    lake.runStage("j", "s")(df)
+    var read: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { read = lake.runStage("j", "s")(df) } == 0)
+    assert(jobsDuring { read = lake.readTable("j/s") } == 0)
+    val m = lake.manifest("j/s", 0)
+    assert(m.contains("\"rows\":10"))
+    assert(m.contains(df.schema.json))
+    assert(read.schema.map(f => (f.name, f.dataType)) == df.schema.map(f => (f.name, f.dataType)))
+    assert(read.count() == 10)
   }
 
   test("quantized embedding layout: round trip, distortion bound, 4x-smaller files") {

@@ -128,4 +128,27 @@ class CocoOpsSpec extends SparkSpec {
     assert(all.annotations.toDF().join(all.images.toDF().select(col("id").as("imageId")),
       Seq("imageId"), "left_anti").isEmpty)
   }
+
+  test("concat: exact ids over 3 parts; an empty part; first (dataset, id) supercategory wins") {
+    val spark2 = spark
+    import spark2.implicits._
+    def ann(id: Long, img: Long, cat: Int) =
+      CocoAnnotation(id, img, cat, Array(0.0, 0, 1, 0, 1, 1, 0, 0), Array(0.0, 0, 1, 1), 0.5)
+    def part(imgs: Int, anns: Seq[CocoAnnotation], cats: Seq[CocoCategory]) = CocoTables(
+      spark.createDataset((0 until imgs).map(i => CocoImage(i.toLong, s"t$i.png", 10, 10))),
+      spark.createDataset(anns), spark.createDataset(cats))
+    val p0 = part(2, Seq(ann(0, 0, 0), ann(1, 1, 1), ann(2, 1, 0)),
+      Seq(CocoCategory(0, "a", "sa0"), CocoCategory(1, "b", "sb0")))
+    val p1 = part(1, Seq.empty, Seq(CocoCategory(0, "c", "sc1")))
+    // categories listed out of id order; "a" comes again with another supercategory
+    val p2 = part(2, Seq(ann(0, 0, 1), ann(1, 1, 0)),
+      Seq(CocoCategory(1, "a", "other"), CocoCategory(0, "d", "sd2")))
+    val all = CocoOps.concat(Seq(p0, p1, p2))
+    all.images.collect().map(i => (i.id, i.fileName)).sortBy(_._1).toSeq shouldBe Seq(
+      (0L, "0_t0.png"), (1L, "0_t1.png"), (2L, "1_t0.png"), (3L, "2_t0.png"), (4L, "2_t1.png"))
+    all.categories.collect().map(c => (c.id, c.name, c.supercategory)).sortBy(_._1).toSeq shouldBe
+      Seq((0, "a", "sa0"), (1, "b", "sb0"), (2, "c", "sc1"), (3, "d", "sd2"))
+    all.annotations.collect().map(a => (a.id, a.imageId, a.categoryId)).sortBy(_._1).toSeq shouldBe
+      Seq((0L, 0L, 0), (1L, 1L, 1), (2L, 1L, 0), (3L, 3L, 0), (4L, 4L, 3))
+  }
 }

@@ -39,4 +39,25 @@ class IdsSpec extends SparkSpec {
     // force the single-partition arm vs the multi-partition arm: same ids
     assert(ids(Long.MaxValue) == ids(0L))
   }
+
+  test("denseId over a small denseId output keeps its size estimate: no sample job, same ids") {
+    val spark2 = spark
+    import spark2.implicits._
+    // unique keys in scrambled order; v is a permutation of 0..199
+    val rows = (0 until 200).map(i => (f"k${i * 37 % 200}%03d", i * 53 % 200)).toDF("k", "v")
+    val inner = Ids.denseId(rows, "a", Seq("k"))
+    // the same rows as a local relation, whose size Catalyst knows
+    val local = inner.collect().toSeq.map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
+      .toDF("k", "v", "a")
+    var outer: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring { outer = Ids.denseId(inner, "b", Seq("v")) }
+    // a RangePartitioner sample job would add one
+    assert(jobs == jobsDuring(Ids.denseId(local, "b", Seq("v"))))
+    val got = outer.select("k", "v", "a", "b").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
+    val expect = (0 until 200).map { i =>
+      (f"k${i * 37 % 200}%03d", i * 53 % 200, (i * 37 % 200).toLong, (i * 53 % 200).toLong)
+    }.toSet
+    assert(got == expect)
+  }
 }
