@@ -1,6 +1,6 @@
 package graft
 
-import graft.geo.CellIndex
+import graft.geo.{CellIndex, JtsGeo}
 import graft.io.WebPages
 import graft.ops.SpatialJoins
 import org.apache.spark.sql.SparkSession
@@ -40,41 +40,41 @@ object Flagship {
     WebPages.benchZones(spark, NZones).write.mode("overwrite").parquet(s"$dir-zones")
   }
 
+  /** WKB of the "jtsfast" zone polygon for the box (x0, y0)-(x1, y1): a
+    * 32-gon around its centre with radii 1.5× the box's width and height,
+    * so neighbouring zones overlap and a point has ~1 candidate — the
+    * compute-dense realistic shape (complex polygon layers), not a
+    * bandwidth microbench. */
+  private[graft] def zoneGon(x0: Double, y0: Double, x1: Double, y1: Double): Array[Byte] = {
+    val (cx, cy) = ((x0 + x1) / 2, (y0 + y1) / 2)
+    val (rx, ry) = ((x1 - x0) * 1.5, (y1 - y0) * 1.5)
+    val coords = (0 to 32).map { k =>
+      val a = 2 * math.Pi * k / 32
+      new org.locationtech.jts.geom.Coordinate(cx + rx * math.cos(a), cy + ry * math.sin(a))
+    }.toArray
+    coords(32) = coords(0)
+    JtsGeo.toWkb(JtsGeo.factory.createPolygon(coords))
+  }
+
   /** One flagship pass over materialized input; returns the result count.
-    * Variants: "jtsfast" (default — primitive-arg probe into a per-thread
-    * cached STRtree of prepared 32-gon polygons, plan stays in whole-stage
-    * codegen), "jts" (mapPartitions row path), "box" (pure-arithmetic
-    * envelope refine). */
+    * Variants: "jtsfast" (default) joins against the zone layer as 32-gons
+    * through [[SpatialJoins.pointInPolygonBroadcastFast]], whose native
+    * probe walks a per-thread grid of prepared polygons while the plan
+    * stays in whole-stage codegen; "box" is the control: the zones'
+    * envelopes through the arithmetic [[SpatialJoins.pointInBox]]. */
   def run(spark: SparkSession, dir: String, variant: String = "jtsfast"): Long = {
+    require(variant == "jtsfast" || variant == "box",
+      s"unknown flagship variant '$variant' (valid: jtsfast|box)")
     import spark.implicits._
     val feats = spark.read.parquet(dir)
-    val joined = variant match {
-      case "box" =>
-        val zones = spark.read.parquet(s"$dir-zones")
-        SpatialJoins.pointInBox(feats, zones, ci, Level, broadcastBoxes = true)
-      case "jts" | "jtsfast" =>
-        // 32-gon zones inflated 3×: ~1 candidate per point — the
-        // compute-dense realistic shape (complex polygon layers), not a
-        // bandwidth microbench
-        val zones = spark.read.parquet(s"$dir-zones")
-          .map { r =>
-            val (x0, y0, x1, y1) =
-              (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))
-            val (cx, cy) = ((x0 + x1) / 2, (y0 + y1) / 2)
-            val (rx, ry) = ((x1 - x0) * 1.5, (y1 - y0) * 1.5)
-            val coords = (0 to 32).map { k =>
-              val a = 2 * math.Pi * k / 32
-              new org.locationtech.jts.geom.Coordinate(
-                cx + rx * math.cos(a), cy + ry * math.sin(a))
-            }.toArray
-            coords(32) = coords(0)
-            (r.getLong(0),
-              graft.geo.JtsGeo.toWkb(graft.geo.JtsGeo.factory.createPolygon(coords)))
-          }.toDF("poly_id", "wkb")
-        if (variant == "jtsfast")
-          SpatialJoins.pointInPolygonBroadcastFast(feats.select("x", "y"), zones)
-        else
-          SpatialJoins.pointInPolygonBroadcast(feats.select("x", "y"), zones)
+    val zones = spark.read.parquet(s"$dir-zones")
+    val joined = if (variant == "box") {
+      SpatialJoins.pointInBox(feats, zones, ci, Level, broadcastBoxes = true)
+    } else {
+      val polys = zones.map(r => (r.getLong(0),
+        zoneGon(r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))))
+        .toDF("poly_id", "wkb")
+      SpatialJoins.pointInPolygonBroadcastFast(feats.select("x", "y"), polys)
     }
     joined
       .withColumn("tile_id", ci.encodeCol(col("x"), col("y"), Level))

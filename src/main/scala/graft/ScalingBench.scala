@@ -18,7 +18,9 @@ import org.apache.spark.sql.SparkSession
   * The job itself lives in [[Flagship]] (shared with the driver-visible
   * [[Bench]]). Orchestrated by `tools/run_scaling.sh`. Modes:
   *   gen <nPages> <dir>              — materialize the feature table
-  *   bench <cores> <dir> [variant]   — run the flagship, print one JSON line
+  *   bench <cores> <dir> [variant] [trials]
+  *                                   — run the flagship (variant jtsfast|box,
+  *                                     default jtsfast), print one JSON line
   */
 object ScalingBench {
 
@@ -161,7 +163,7 @@ object ScalingBench {
 
     case "bench" =>
       val (cores, dir) = (args(1).toInt, args(2))
-      val variant = if (args.length > 3) args(3) else "jts"
+      val variant = if (args.length > 3) args(3) else "jtsfast"
       val trials = if (args.length > 4) args(4).toInt else 2
       val spark = session(cores)
       spark.sparkContext.setLogLevel("WARN")

@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** kernel wrapper for the broadcast-STRtree point-in-polygon probe —
-  * delegates to [[PipTreeCache.probe]] (per-thread prepared trees,
+/** kernel wrapper for the broadcast point-in-polygon probe — delegates to
+  * [[PipTreeCache.probe]] (per-thread prepared-polygon grids,
   * thread-confined probe state) */
 final class PipProbeKernel(bcId: Long, bc: Broadcast[Array[(Long, Array[Byte])]])
   extends Serializable {
@@ -57,7 +57,7 @@ case class PipProbe(left: Expression, right: Expression,
 }
 
 object PipExprs {
-  /** matching poly ids of a point against the broadcast prepared-STRtree */
+  /** matching poly ids of a point against the broadcast polygon layer */
   def pipProbe(x: Column, y: Column, bcId: Long,
                bc: Broadcast[Array[(Long, Array[Byte])]]): Column =
     Bridge.column(PipProbe(Bridge.expression(x), Bridge.expression(y), bcId, bc))

@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   * over corpus vocab ids (not JVM string hashes), so every step is
   * reproducible in the DuckDB oracle and across languages/engines.
   *
-  * Scale notes: vocab assignment is a groupBy+window over distinct tokens
-  * (shuffle ∝ vocab size, not corpus size); MinHash signatures are one
-  * explode + hash-agg; LSH candidate generation is a self-equi-join on
-  * (band, bandkey) — never an all-pairs cross join.
+  * Scale notes: vocab ids come from a range-partitioned prefix sum over
+  * distinct tokens (shuffle ∝ vocab size, not corpus size); MinHash
+  * signatures are one hash-agg; LSH grouping is an aggregation plus an
+  * equi-join on (band, bandkey) — never an all-pairs cross join.
   */
 object Dedup {
 
@@ -43,100 +43,56 @@ object Dedup {
       .join(voc, "token")
       .select("id", "vid")
 
-
-  /** MinHash signatures: numHashes universal-hash minima per doc.
+  /** MinHash signatures: (id, sig) with sig(j) the j-th of `numHashes`
+    * universal-hash minima over the doc's token vids,
     * h_j(v) = ((v+1)·(2654435761 + 2j) + j·7919) mod (2^31−1).
     * Two traps this form avoids (both found by the planted-pair spec):
     * the multiplier must exceed the modulus so products wrap (a small one
     * keeps the map order-preserving → MinHash degrades to "hash of the
     * smallest vid"), and v=0 must not be a fixed point (v+1 shift) — else
-    * every doc containing vocab id 0 shares one signature. Output (id,j,mh).
+    * every doc containing vocab id 0 shares one signature.
     *
     * Implemented as a typed partial/final [[MinhashAgg]]: one hash-agg
     * shuffle keyed by doc id, each token folding its numHashes minima into
     * a primitive long[] buffer — no numHashes× row explode (the previous
     * column form shuffled `numHashes · |tokens|` rows; same shuffle-IO fix
-    * as SimHash in round 2). The signature array then explodes to the
-    * (id, j, mh) layout LSH banding and the q27 oracle consume. */
-  def minhash(tokenVids: DataFrame, numHashes: Int): DataFrame =
-    minhashSigs(tokenVids, numHashes)
-      .select(col("id"), posexplode(col("sig")).as(Seq("j", "mh")))
-      .select(col("id"), col("j").cast("int").as("j"), col("mh"))
-
-  /** MinHash signatures in their ARRAY form: (id, sig) with sig(j) the
-    * j-th universal-hash minimum — the typed [[MinhashAgg]] output before
-    * [[minhash]]'s posexplode to the (id, j, mh) row layout. Round-6
-    * addition: band keys are a pure PROJECTION of this array
-    * ([[bandedKeysFromSigs]]), so LSH pipelines that start here skip the
-    * re-aggregation shuffle the exploded layout forces. */
+    * as SimHash in round 2). LSH band keys are a pure projection of the
+    * array ([[bandedKeysFromSigs]]), so no re-aggregation follows. */
   def minhashSigs(tokenVids: DataFrame, numHashes: Int): DataFrame =
     tokenVids.groupBy("id")
       .agg(MinhashAgg.udafCol(numHashes, col("vid")).as("sig"))
 
-  /** (id, band, bandkey) rows from MinHash signatures with bands of 2
-    * rows: band key packs the two minima collision-free into one Long. */
-  private def bandedKeys(signatures: DataFrame): DataFrame =
-    signatures
-      .withColumn("band", (col("j") / 2).cast("int"))
-      .withColumn("slot", col("j") % 2)
-      .groupBy("id", "band")
-      .agg(min(when(col("slot") === 0, col("mh"))).as("m0"),
-        min(when(col("slot") === 1, col("mh"))).as("m1"))
-      .withColumn("bandkey", col("m0") * MersennePrime + col("m1"))
-      .select("id", "band", "bandkey")
-
-  /** [[bandedKeys]] from the ARRAY signature form — a pure projection
-    * (round 6): band b's key packs sig(2b) and sig(2b+1); no shuffle.
-    * The exploded-layout twin above re-aggregates by (id, band) — one
-    * whole extra exchange of the signature table — because the row
-    * layout has already lost the per-id grouping. Identical rows
-    * (asserted in DedupSpec). */
-  private def bandedKeysFromSigs(sigs: DataFrame): DataFrame =
+  /** (id, band, bandkey) rows from array signatures, bands of 2 hashes: band
+    * b's key packs sig(2b) and sig(2b+1) collision-free into one Long — a
+    * pure projection, no shuffle. A signature whose length is odd or below
+    * 2 fails the query (raise_error naming the length) instead of silently
+    * dropping its last hash or failing on an index. */
+  private[graft] def bandedKeysFromSigs(sigs: DataFrame): DataFrame = {
+    val len = size(col("sig"))
+    val nBands = when(len >= 2 && len % 2 === 0, (len / 2).cast("int"))
+      .otherwise(raise_error(concat(
+        lit("MinHash signature length must be even and at least 2, got "),
+        len.cast("string"))))
     sigs.select(col("id"),
-        posexplode(transform(
-          sequence(lit(0), (size(col("sig")) / 2).cast("int") - 1),
+        posexplode(transform(sequence(lit(0), nBands - 1),
           b => element_at(col("sig"), b * 2 + 1) * MersennePrime +
             element_at(col("sig"), b * 2 + 2)))
           .as(Seq("band", "bandkey")))
       .select(col("id"), col("band").cast("int").as("band"), col("bandkey"))
-
-  /** LSH candidate pairs from MinHash signatures. Output distinct (a, b)
-    * with a < b — EVERY colliding pair, for pipelines that score each
-    * candidate (exact Jaccard / cosine verify). A bucket of k docs emits
-    * (k choose 2) pairs, so this is quadratic per bucket BY DESIGN; when
-    * the downstream only needs GROUPING, use [[lshComponentEdges]], which
-    * is connectivity-equivalent and linear. */
-  def lshCandidates(signatures: DataFrame): DataFrame = {
-    val banded = bandedKeys(signatures)
-    // rename columns on an independent projection — self-join on the same
-    // lineage silently mis-resolves `l.id < r.id` to one side
-    val left = banded.select(col("id").as("a"), col("band"), col("bandkey"))
-    val right = banded.select(col("id").as("b"), col("band"), col("bandkey"))
-    left.join(right, Seq("band", "bandkey"))
-      .where(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
   }
 
-  /** Connectivity edges from MinHash LSH buckets: each (band, bandkey)
-    * bucket contributes a STAR — bucket-min id ↔ every other member —
-    * instead of the (k choose 2) clique. The connected components are
-    * IDENTICAL (a star spans its bucket), but a k-doc bucket emits k−1
-    * edges instead of k(k−1)/2: at sf0.1 the gate graph drops from 7.8 M
-    * pairs to ~20 k edges; at corpus scale a hot band bucket stops being
-    * quadratic. One aggregation + one equi-join, both keyed by
-    * (band, bandkey). The natural input to [[connectedComponents]]. */
-  def lshComponentEdges(signatures: DataFrame): DataFrame =
-    starEdges(bandedKeys(signatures))
-
-  /** [[lshComponentEdges]] directly from the ARRAY signature form
-    * ([[minhashSigs]]) — band keys are projected, not re-aggregated:
-    * one fewer exchange of the signature table per pipeline (round 6). */
-  def lshComponentEdgesFromSigs(sigs: DataFrame): DataFrame =
-    starEdges(bandedKeysFromSigs(sigs))
-
-  /** bucket-min star edges from (id, band, bandkey) rows */
-  private def starEdges(banded: DataFrame): DataFrame = {
+  /** Connectivity edges from MinHash LSH buckets of array signatures
+    * ([[minhashSigs]]): each (band, bandkey) bucket contributes a STAR —
+    * bucket-min id ↔ every other member — instead of the (k choose 2)
+    * clique. The connected components are IDENTICAL (a star spans its
+    * bucket), but a k-doc bucket emits k−1 edges instead of k(k−1)/2: at
+    * sf0.1 the gate graph drops from 7.8 M pairs to ~20 k edges; at corpus
+    * scale a hot band bucket stops being quadratic. Band keys are
+    * projected ([[bandedKeysFromSigs]]), then one aggregation + one
+    * equi-join, both keyed by (band, bandkey). Output distinct (a, b) with
+    * a the bucket min. The natural input to [[connectedComponents]]. */
+  def lshComponentEdgesFromSigs(sigs: DataFrame): DataFrame = {
+    val banded = bandedKeysFromSigs(sigs)
     val bucketMin = banded.groupBy("band", "bandkey").agg(min("id").as("a"))
     banded.join(bucketMin, Seq("band", "bandkey"))
       .where(col("id") =!= col("a"))
@@ -252,7 +208,7 @@ object Dedup {
 
   /** Connected components over an undirected candidate-pair set (a, b) —
     * the dedup CLUSTERING step every near-dup pipeline needs between
-    * "candidate pairs" ([[lshCandidates]], [[ngramJaccard]],
+    * "candidate pairs" ([[lshComponentEdgesFromSigs]], [[ngramJaccard]],
     * [[embeddingNearDup]]) and "keep one per group": transitive duplicates
     * (A~B, B~C) must land in ONE group even when (A,C) was never a
     * candidate. Output: (id, comp) for every node appearing in `pairs`,

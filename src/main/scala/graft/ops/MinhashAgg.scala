@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-/** Partial/final MinHash aggregator (see [[Dedup.minhash]]): buffer =
+/** Partial/final MinHash aggregator (see [[Dedup.minhashSigs]]): buffer =
   * long[numHashes] running minima, reduce folds one token's `numHashes`
   * universal hashes in a tight primitive loop, merge is elementwise min —
   * commutative and associative, so Spark's partial (map-side) + final

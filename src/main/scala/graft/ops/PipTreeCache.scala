@@ -16,10 +16,11 @@ import org.locationtech.jts.geom.prep.PreparedGeometry
   * covers), where the tree walked ~log-depth node envelopes per probe.
   * Grid resolution targets ~2 cells per polygon, so cell lists stay a
   * handful of entries for dim-table zone layers; a polygon is registered
-  * in every cell its envelope touches, so the candidate set is a
-  * superset of the tree's and `covers` filters identically — hit sets
-  * are unchanged (SpatialJoinsSpec parity). Points outside the layer's
-  * extent return the shared empty array without touching the index. */
+  * in every cell its envelope touches, so every covering polygon is a
+  * candidate and prepared `covers` decides — SpatialJoinsSpec checks the
+  * hit set against a nested-loop JTS `covers` reference. Points outside
+  * the layer's extent return the shared empty array without touching the
+  * index. */
 object PipTreeCache {
 
   private val EMPTY = Array.empty[Long]

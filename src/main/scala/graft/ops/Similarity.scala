@@ -4,10 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Approximate-nearest-neighbour search over an embedding column
-  * (`array<float>`), per the builder brief: brute-force cosine top-k as the
-  * correctness baseline, and a sign-random-projection (SRP) LSH-bucketed
-  * variant as the scale path. Per-pair dot products on the hot join paths
+/** Nearest-neighbour search over an embedding column (`array<float>`):
+  * brute-force cosine top-k ([[cosineTopK]] and its broadcast/auto arms)
+  * is the correctness baseline; the scale paths are banded
+  * sign-random-projection LSH ([[annLshBanded]] — a single hash table is
+  * `bands = 1`) and IVF ([[annIvf]]), each re-ranking its candidates with
+  * exact cosine ([[scorePairs]]). Per-pair dot products on the hot join paths
   * run as the native codegen'd [[graft.functions.FloatVecDot]] expression;
   * the `aggregate`/`zip_with` higher-order [[dot]] stays as the
   * SQL-portable reference form (same left-to-right double fold — the two
@@ -55,46 +57,6 @@ object Similarity extends Serializable {
   private def planeComponent(p: Column, i: Column): Column =
     (pmod(p * 2654435761L + i * 40503L, lit(1000L)).cast("double") / 1000.0) - 0.5
 
-  /** SRP-LSH bucket signature: `nPlanes` sign bits packed into one Long.
-    * Vectors in the same bucket are cosine-close with high probability.
-    * Runs as the native codegen'd [[graft.functions.FloatVecSrpKeys]]
-    * expression (one band of nPlanes bits) — bit-identical to the
-    * column-HOF twin [[srpSignatureRef]], asserted in SimilaritySpec. */
-  def srpSignature(vec: Column, nPlanes: Int): Column =
-    element_at(graft.functions.VecExprs.srpKeys(vec, 1, nPlanes), 1)
-
-  /** Column-HOF reference twin of [[srpSignature]] (the SQL-portable
-    * spelling the DuckDB oracles replay); interprets a lambda per
-    * (vector, plane) — spec/oracle use only. */
-  def srpSignatureRef(vec: Column, nPlanes: Int): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        transform(vec, (x, i) => x.cast("double") * planeComponent(lit(p.toLong), i.cast("long"))),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** LSH-bucketed ANN: candidates share an SRP bucket, then exact cosine
-    * re-rank within bucket. Returns (qid, rnk, pid, cos) with rnk ≤ k —
-    * approximate: recall measured against [[cosineTopK]] in the spec.
-    * Single-table: all `nPlanes` bits must match, so recall collapses as
-    * nPlanes grows — [[annLshBanded]] is the production path. */
-  def annLsh(emb: DataFrame, idCol: String, vecCol: String, k: Int, nPlanes: Int): DataFrame = {
-    import graft.functions.VecExprs
-    val e = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("n", VecExprs.normF(col("v")))
-      .withColumn("sig", srpSignature(col("v"), nPlanes))
-    val pairs = e.as("a").join(e.as("b"),
-        col("a.sig") === col("b.sig") && col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("qid"), col("b.id").as("pid"),
-        (VecExprs.dotF(col("a.v"), col("b.v")) / (col("a.n") * col("b.n"))).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("pid").asc)
-    pairs.withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
-      .select("qid", "rnk", "pid", "cos")
-  }
-
   /** One band's SRP key: `rowsPerBand` sign bits from planes
     * [band·rowsPerBand, (band+1)·rowsPerBand), packed into a Long. Pure
     * column arithmetic — reproducible in the DuckDB oracle. */
@@ -109,17 +71,6 @@ object Similarity extends Serializable {
     bits.reduce(_ + _)
   }
 
-  /** Banded multi-table SRP-LSH ANN — the scale path. `bands` independent
-    * hash tables of `rowsPerBand` sign bits each; candidates are the UNION
-    * of per-band bucket matches (OR-amplification: collision prob
-    * 1−(1−s^r)^b for cosine similarity s, instead of the single-table s^r
-    * which collapses as r grows), then exact cosine re-rank of candidates.
-    *
-    * Plan shape: signature projection stays in whole-stage codegen; the
-    * candidate step is a self-EQUI-join on (band, bandkey) — bucketed,
-    * never all-pairs; the re-rank scores only candidate pairs with the JVM
-    * fold kernel. At 100 TB the (band, bandkey) join shuffles both sides by
-    * key like any other equi-join; no stage is quadratic in the corpus. */
   /** JVM twin of [[bandKeyCol]] — identical IEEE754 op sequence (same
     * products, same left-to-right fold), ~10× faster than evaluating the
     * interpreted higher-order-function expression per (vector, band): HOFs
@@ -167,6 +118,17 @@ object Similarity extends Serializable {
       .select("a", "b").distinct()
   }
 
+  /** Banded multi-table SRP-LSH ANN — the scale path. `bands` independent
+    * hash tables of `rowsPerBand` sign bits each; candidates are the UNION
+    * of per-band bucket matches (OR-amplification: collision prob
+    * 1−(1−s^r)^b for cosine similarity s, instead of the single-table s^r
+    * which collapses as r grows), then exact cosine re-rank of candidates.
+    *
+    * Plan shape: signature projection stays in whole-stage codegen; the
+    * candidate step is a self-EQUI-join on (band, bandkey) — bucketed,
+    * never all-pairs; the re-rank scores only candidate pairs with the JVM
+    * fold kernel. At 100 TB the (band, bandkey) join shuffles both sides by
+    * key like any other equi-join; no stage is quadratic in the corpus. */
   def annLshBanded(emb: DataFrame, idCol: String, vecCol: String, k: Int,
                    bands: Int, rowsPerBand: Int): DataFrame = {
     // round 6: the directed candidate set {(a,b), (b,a) : a,b share a

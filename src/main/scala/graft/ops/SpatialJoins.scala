@@ -1,33 +1,28 @@
 package graft.ops
 
-import graft.geo.{CellIndex, JtsGeo}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.geo.CellIndex
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.locationtech.jts.geom.prep.PreparedGeometry
-import org.locationtech.jts.index.strtree.STRtree
 
-import scala.jdk.CollectionConverters._
-
-/** Cell-grid spatial joins (SURVEY.md §2.3 J1/J7, §4.1-2).
+/** Point-in-zone joins (SURVEY.md §2.3 J1, §4.1-2).
   *
-  * Catalyst plans a theta predicate like `contains(poly, point)` as an
-  * O(n·m) BroadcastNestedLoopJoin, so every spatial join here is decomposed
-  * into an **equi-join on cell id** that Catalyst shuffles/broadcasts like
-  * any other key join, followed by an exact refine step:
+  * Catalyst plans a theta predicate like `contains(box, point)` as an
+  * O(n·m) BroadcastNestedLoopJoin, so the box joins are decomposed into an
+  * **equi-join on cell id** that Catalyst shuffles/broadcasts like any
+  * other key join, followed by an exact arithmetic refine:
   *
-  * {{{ points ⋈ polys  ≡  encode(point) = explode(cellsCovering(env(poly))) , then refine }}}
+  * {{{ points ⋈ boxes  ≡  encode(point) = explode(cellsCovering(box)) , then refine }}}
   *
-  * The point side carries exactly one cell and the polygon side is exploded
+  * The point side carries exactly one cell and the box side is exploded
   * over its covering cells, so each qualifying pair appears exactly once —
-  * no post-join dedup (and no extra shuffle for it).
+  * no post-join dedup (and no extra shuffle for it). [[pointInBoxSalted]]
+  * and [[pointInBoxAdaptive]] are the skew arms of the same join.
   *
-  * Refine paths:
-  *  - pure-arithmetic for boxes (whole-stage codegen, zero JTS),
-  *  - per-partition JTS with prepared-geometry cache for real polygons,
-  *  - broadcast STRtree (`pointInPolygonBroadcast`) when the polygon side
-  *    fits on one executor — the "broadcast-or-partitioned" pair the
-  *    north_star names.
+  * Real polygons go through [[pointInPolygonBroadcastFast]]: the polygon
+  * layer is broadcast and each point probes an executor-side grid of
+  * prepared polygons, so the point side is never shuffled. There is no
+  * partitioned polygon arm; a layer too large to broadcast would need one,
+  * auto-selected and gated.
   */
 object SpatialJoins {
 
@@ -49,104 +44,15 @@ object SpatialJoins {
       .drop("_cell")
   }
 
-  /** Point-in-polygon with partitioned refine. `polys` carries
-    * (`poly_id`:long, `wkb`:binary, `xmin`,`ymin`,`xmax`,`ymax`). Output:
-    * point columns + `poly_id`. The equi-join shuffles both sides by cell;
-    * refine parses each polygon once per task (keyed cache of prepared
-    * geometries) — the partitioned arm for when neither side broadcasts. */
-  def pointInPolygon(points: DataFrame, polys: DataFrame, ci: CellIndex, level: Int): DataFrame = {
-    val p = points.withColumn("_cell", ci.encodeCol(col("x"), col("y"), level))
-    val b = polys
-      .withColumn("_cell",
-        explode(ci.cellsCoveringCol(col("xmin"), col("ymin"), col("xmax"), col("ymax"), level)))
-      .select(col("_cell"), col("poly_id"), col("wkb"))
-    val joined = p.join(b, "_cell").drop("_cell")
-
-    val outSchema = StructType(joined.schema.filterNot(f => f.name == "wkb"))
-    val xI = joined.schema.fieldIndex("x"); val yI = joined.schema.fieldIndex("y")
-    val wI = joined.schema.fieldIndex("wkb"); val idI = joined.schema.fieldIndex("poly_id")
-    val keep = joined.schema.indices.filterNot(_ == wI)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    joined.mapPartitions { it =>
-      val cache = new java.util.HashMap[Long, PreparedGeometry]()
-      it.filter { r =>
-        val pg = cache.computeIfAbsent(r.getLong(idI),
-          _ => JtsGeo.prepare(JtsGeo.fromWkb(r.getAs[Array[Byte]](wI))))
-        pg.covers(JtsGeo.point(r.getDouble(xI), r.getDouble(yI)))
-      }.map(r => Row.fromSeq(keep.map(r.get)))
-    }
-  }
-
-  /** Point-in-polygon with the polygon side broadcast and an STRtree probed
-    * per partition — no shuffle of the point side at all. Preferred when the
-    * polygon layer is a dim-table (tile layers, zone layers).
-    *
-    * Hot-loop discipline (this is the 100 TB fast path): the probe point and
-    * its envelope are reused across rows (`geometryChanged()` resets cached
-    * envelopes), tree hits go through an `ItemVisitor` (no per-row ArrayList),
-    * and output rows are built from positional arrays — per-row garbage is
-    * a single small array, which is what lets 32 allocating threads scale. */
-  def pointInPolygonBroadcast(points: DataFrame, polys: DataFrame): DataFrame = {
-    val spark = points.sparkSession
-    val polyRows = polys.select("poly_id", "wkb").collect()
-    val bc = spark.sparkContext.broadcast(polyRows.map(r =>
-      (r.getLong(0), r.getAs[Array[Byte]](1))))
-
-    val outSchema = points.schema.add("poly_id", LongType, nullable = false)
-    val n = points.schema.length
-    val xI = points.schema.fieldIndex("x"); val yI = points.schema.fieldIndex("y")
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    points.mapPartitions { it =>
-      val tree = new STRtree()
-      bc.value.foreach { case (id, wkb) =>
-        val g = JtsGeo.fromWkb(wkb)
-        tree.insert(g.getEnvelopeInternal, (id, JtsGeo.prepare(g)))
-      }
-      if (bc.value.nonEmpty) tree.build()
-      val coord = new org.locationtech.jts.geom.Coordinate(0, 0)
-      val pt = JtsGeo.factory.createPoint(coord)
-      val env = new org.locationtech.jts.geom.Envelope()
-      val hits = new java.util.ArrayList[Long](4)
-      val visitor = new org.locationtech.jts.index.ItemVisitor {
-        override def visitItem(item: AnyRef): Unit = {
-          val (id, pg) = item.asInstanceOf[(Long, PreparedGeometry)]
-          if (pg.covers(pt)) hits.add(id)
-        }
-      }
-      it.flatMap { r =>
-        coord.x = r.getDouble(xI); coord.y = r.getDouble(yI)
-        pt.geometryChanged()
-        env.init(coord.x, coord.x, coord.y, coord.y)
-        hits.clear()
-        tree.query(env, visitor)
-        if (hits.isEmpty) Iterator.empty
-        else {
-          // materialize eagerly: `hits` and the upstream row are reused
-          // buffers — deferred access would read the next row's state
-          val m = hits.size
-          val out = new Array[Row](m)
-          var k = 0
-          while (k < m) {
-            val arr = new Array[Any](n + 1)
-            var i = 0
-            while (i < n) { arr(i) = r.get(i); i += 1 }
-            arr(n) = hits.get(k)
-            out(k) = Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-            k += 1
-          }
-          out.iterator
-        }
-      }
-    }
-  }
-
-  /** Fast-path broadcast PIP: a primitive-arg function probes a
-    * per-executor cached STRtree and returns the matching poly ids; the
-    * surrounding plan (scan → explode → aggregate) stays in whole-stage
-    * codegen, so per-row garbage is one small array on hit and a shared
-    * empty array on miss — ~3× less allocation churn than the
-    * `mapPartitions` row-codec path, which is what the 100 TB scan feeds.
-    * Output: point columns + `poly_id`. */
+  /** Broadcast point-in-polygon. `polys` carries (`poly_id`:long,
+    * `wkb`:binary) and is collected and broadcast; each point is probed by
+    * a native expression ([[graft.functions.PipProbe]]) taking primitive
+    * doubles against the executor-side grid of prepared polygons in
+    * [[PipTreeCache]]. The surrounding plan (scan → explode → aggregate)
+    * stays in whole-stage codegen; per-row garbage is one small array on a
+    * hit and a shared empty array on a miss. Output: point columns +
+    * `poly_id`, one row per covering polygon (JTS `covers`, so a point on
+    * a polygon's boundary matches). */
   def pointInPolygonBroadcastFast(points: DataFrame, polys: DataFrame): DataFrame = {
     val spark = points.sparkSession
     val polyRows = polys.select("poly_id", "wkb").collect()
@@ -233,29 +139,6 @@ object SpatialJoins {
     p.join(b, Seq("_cell"))
       .where(col("xmin") <= col("x") && col("x") < col("xmax") &&
              col("ymin") <= col("y") && col("y") < col("ymax"))
-      .drop("_cell")
-  }
-
-  /** Envelope-intersects range join (reference J7, batch_geojson2coco.py:118)
-    * via the same cell decomposition. Both sides carry envelopes; the left
-    * side's cover is exploded, the right side joins on its own cover — pairs
-    * dedup on the *smallest common cell* trick: a pair is emitted only from
-    * the cell containing the left envelope's min corner if that cell is in
-    * the right cover, else kept distinct. Simpler and still single-emission:
-    * emit from the cell of max(leftMin, rightMin) corner. */
-  def envelopeJoin(left: DataFrame, right: DataFrame, ci: CellIndex, level: Int): DataFrame = {
-    val l = left.withColumn("_cell",
-      explode(ci.cellsCoveringCol(col("lxmin"), col("lymin"), col("lxmax"), col("lymax"), level)))
-    val r = right.withColumn("_cell",
-      explode(ci.cellsCoveringCol(col("rxmin"), col("rymin"), col("rxmax"), col("rymax"), level)))
-    l.join(r, "_cell")
-      .where(col("lxmin") <= col("rxmax") && col("rxmin") <= col("lxmax") &&
-             col("lymin") <= col("rymax") && col("rymin") <= col("lymax"))
-      // single-emission guard: keep the pair only in the cell that contains
-      // the intersection's min corner — every intersecting pair has exactly
-      // one such cell, so no distinct() shuffle is needed.
-      .where(col("_cell") === ci.encodeCol(
-        greatest(col("lxmin"), col("rxmin")), greatest(col("lymin"), col("rymin")), level))
       .drop("_cell")
   }
 }

@@ -151,23 +151,22 @@ class PlanSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val tv = (0 until 100).map(i => (i.toLong % 10, i.toLong)).toDF("id", "vid")
-    val df = graft.ops.Dedup.minhash(tv, 64)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    // the generate (posexplode of the signature array) must sit ABOVE the
-    // aggregate, not below the shuffle like the old 64x row-explode form
-    val genIdx = p.indexOf("Generate")
-    val aggIdx = p.indexOf("HashAggregate")
-    assert(genIdx >= 0 && aggIdx >= 0 && genIdx < aggIdx,
-      s"explode should be post-aggregation:\n$p")
+    // the plan before execution: AQE renders it once (a final plan is
+    // rendered next to its initial plan)
+    val p = graft.ops.Dedup.minhashSigs(tv, 64).queryExecution.executedPlan.toString
+    // one exchange, feeding the final aggregate, and no Generate anywhere:
+    // the old form exploded every token numHashes times below the shuffle
+    assert("Exchange hashpartitioning".r.findAllMatchIn(p).size == 1, p)
+    assert(!p.contains("Generate"), s"row explode in the signature plan:\n$p")
+    assert(p.contains("Aggregate"), p)
   }
 
   test("LSH star-edge extraction plans as agg + equi-join, never all-pairs") {
     val spark2 = spark
     import spark2.implicits._
-    val sigs = (0 until 60).flatMap(i => (0 until 4).map(j =>
-      (i.toLong, j, (i % 5).toLong * 7 + j))).toDF("id", "j", "mh")
-    val df = graft.ops.Dedup.lshComponentEdges(sigs)
+    val sigs = (0 until 60).map(i =>
+      (i.toLong, (0 until 4).map(j => (i % 5).toLong * 7 + j))).toDF("id", "sig")
+    val df = graft.ops.Dedup.lshComponentEdgesFromSigs(sigs)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)

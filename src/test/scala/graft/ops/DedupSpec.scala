@@ -29,38 +29,78 @@ class DedupSpec extends SparkSpec {
   test("minhash matches brute-force formula") {
     val voc = Dedup.vocab(docs, "text")
     val tv = Dedup.docTokenVids(docs, "doc_id", "text", voc)
-    val got = Dedup.minhash(tv, 4).collect()
-      .map(r => ((r.getLong(0), r.getInt(1)), r.getLong(2))).toMap
+    val got = Dedup.minhashSigs(tv, 4).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val vocMap = voc.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val docMap = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    for ((id, text) <- docMap; j <- 0 until 4) {
+    assert(got.keySet == docMap.keySet)
+    for ((id, text) <- docMap) {
       val vids = text.split(" ").distinct.map(vocMap)
-      val expect = vids.map(v => ((v + 1) * (2654435761L + 2L * j) + j * 7919L) % Dedup.MersennePrime).min
-      assert(got((id, j)) == expect, s"doc $id hash $j")
+      val expect = (0 until 4).map(j =>
+        vids.map(v => ((v + 1) * (2654435761L + 2L * j) + j * 7919L) % Dedup.MersennePrime).min)
+      assert(got(id) == expect, s"doc $id")
     }
   }
 
-  test("lshCandidates finds planted near-dup pairs and no unrelated ones") {
+  test("lshComponentEdgesFromSigs finds planted near-dup pairs and no unrelated ones") {
     val voc = Dedup.vocab(docs, "text")
     val tv = Dedup.docTokenVids(docs, "doc_id", "text", voc)
-    val cands = Dedup.lshCandidates(Dedup.minhash(tv, 8))
+    val edges = Dedup.lshComponentEdgesFromSigs(Dedup.minhashSigs(tv, 8))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = (0 until 40).map(i => (2L * i, 2L * i + 1)).toSet
-    // near-dups share 29/31 distinct tokens → most bands collide
-    val found = planted.intersect(cands)
+    // near-dups share 79/81 distinct tokens → most bands collide; each
+    // planted pair is a 2-doc bucket, so its star edge is the pair itself
+    val found = planted.intersect(edges)
     assert(found.size >= 35, s"recall too low: ${found.size}/40")
-    // unrelated pairs share ≤ a few tokens; allow rare accidental collisions
-    assert((cands -- planted).size <= 3, s"false positives: ${cands -- planted}")
+    // unrelated pairs share at most "CHANGED"; allow rare accidental collisions
+    assert((edges -- planted).size <= 3, s"false positives: ${edges -- planted}")
   }
 
-  test("lshComponentEdgesFromSigs equals the exploded-layout edges (round 6)") {
+  test("lshComponentEdgesFromSigs equals driver-computed bucket-min star edges") {
+    val spark2 = spark
+    import spark2.implicits._
+    // hand-made signatures: 2 bands; docs 1-3 share band 0, docs 3-4 share
+    // band 1 (a hub in two buckets), doc 5 collides with nobody
+    val sigs = Seq(
+      1L -> Seq(7L, 8L, 1L, 1L), 2L -> Seq(7L, 8L, 2L, 2L), 3L -> Seq(7L, 8L, 9L, 9L),
+      4L -> Seq(5L, 5L, 9L, 9L), 5L -> Seq(6L, 6L, 3L, 3L), 6L -> Seq(7L, 9L, 4L, 4L))
+    val viaSpark = Dedup.lshComponentEdgesFromSigs(sigs.toDF("id", "sig"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val buckets = sigs.flatMap { case (id, sig) =>
+      sig.grouped(2).zipWithIndex.map { case (Seq(m0, m1), b) =>
+        (b, m0 * Dedup.MersennePrime + m1) -> id }
+    }.groupBy(_._1).values.map(_.map(_._2))
+    val expect = buckets.flatMap(ids => ids.filter(_ != ids.min).map(ids.min -> _)).toSet
+    assert(expect == Set(1L -> 2L, 1L -> 3L, 3L -> 4L))
+    assert(viaSpark.length == viaSpark.toSet.size, "duplicate edge")
+    assert(viaSpark.toSet == expect)
+    // and on real signatures, the same driver-side star construction
     val voc = Dedup.vocab(docs, "text")
     val tv = Dedup.docTokenVids(docs, "doc_id", "text", voc)
-    val viaRows = Dedup.lshComponentEdges(Dedup.minhash(tv, 8))
+    val real = Dedup.minhashSigs(tv, 8)
+    val realBuckets = real.collect().toSeq.flatMap { r =>
+      r.getSeq[Long](1).grouped(2).zipWithIndex.map { case (Seq(m0, m1), b) =>
+        (b, m0 * Dedup.MersennePrime + m1) -> r.getLong(0) }
+    }.groupBy(_._1).values.map(_.map(_._2))
+    val realExpect =
+      realBuckets.flatMap(ids => ids.filter(_ != ids.min).map(ids.min -> _)).toSet
+    val realGot = Dedup.lshComponentEdgesFromSigs(real)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaSigs = Dedup.lshComponentEdgesFromSigs(Dedup.minhashSigs(tv, 8))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaSigs == viaRows)
+    assert(realGot == realExpect && realExpect.nonEmpty)
+  }
+
+  test("MinHash banding rejects odd and sub-2 signature lengths, naming the length") {
+    val spark2 = spark
+    import spark2.implicits._
+    for (len <- Seq(1, 3)) {
+      val sigs = Seq(1L -> Seq.tabulate(len)(_.toLong + 1)).toDF("id", "sig")
+      val e = intercept[Exception](Dedup.lshComponentEdgesFromSigs(sigs).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains(
+        s"MinHash signature length must be even and at least 2, got $len")),
+        s"len $len: ${msgs.mkString(" | ")}")
+    }
   }
 
   test("ngramJaccard matches brute force") {

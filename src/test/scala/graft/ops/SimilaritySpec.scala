@@ -42,8 +42,8 @@ class SimilaritySpec extends SparkSpec {
     assert(got.size == 200)
   }
 
-  test("annLsh recall@3 is high on clustered data") {
-    val got = Similarity.annLsh(emb, "vec_id", "embedding", 3, nPlanes = 6)
+  test("single-table LSH (annLshBanded, one band) recall@3 is high on clustered data") {
+    val got = Similarity.annLshBanded(emb, "vec_id", "embedding", 3, bands = 1, rowsPerBand = 6)
       .collect().groupBy(_.getLong(0))
       .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
     val expect = bruteTopK(3)
@@ -85,7 +85,8 @@ class SimilaritySpec extends SparkSpec {
     }
     val banded = recallOf(Similarity.annLshBanded(emb, "vec_id", "embedding", 3,
       bands = 6, rowsPerBand = 4))
-    val single = recallOf(Similarity.annLsh(emb, "vec_id", "embedding", 3, nPlanes = 24))
+    val single = recallOf(Similarity.annLshBanded(emb, "vec_id", "embedding", 3,
+      bands = 1, rowsPerBand = 24))
     assert(banded >= 0.9, s"banded recall@3 = $banded")
     assert(banded > single, s"OR-amplification should beat one 24-bit table: $banded vs $single")
   }
@@ -156,8 +157,8 @@ class SimilaritySpec extends SparkSpec {
     def check(): Unit = {
       val rows = emb.select(col("vec_id"), col("embedding"),
           graft.functions.VecExprs.srpKeys(col("embedding"), 4, 6).as("keys"),
-          Similarity.srpSignature(col("embedding"), 10).as("sig"),
-          Similarity.srpSignatureRef(col("embedding"), 10).as("sigref"))
+          element_at(graft.functions.VecExprs.srpKeys(col("embedding"), 1, 10), 1).as("sig"),
+          Similarity.bandKeyCol(col("embedding"), lit(0), 10).as("sigref"))
         .collect()
       rows.length shouldBe 200
       rows.foreach { r =>
@@ -166,7 +167,7 @@ class SimilaritySpec extends SparkSpec {
         (0 until 4).foreach { b =>
           assert(keys(b) == Similarity.bandKeyKernel(v, b, 6), s"band $b")
         }
-        r.getLong(3) shouldBe r.getLong(4) // native signature == HOF twin
+        r.getLong(3) shouldBe r.getLong(4) // one-band native signature == HOF band key
       }
     }
     check()

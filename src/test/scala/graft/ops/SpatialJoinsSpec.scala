@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.geo.CellIndex
+import graft.geo.{CellIndex, JtsGeo}
 import graft.io.WebPages
 import org.apache.spark.sql.functions._
 
@@ -39,36 +39,56 @@ class SpatialJoinsSpec extends SparkSpec {
     assert(got.isEmpty)
   }
 
-  test("pointInPolygon (partitioned JTS refine) matches oracle") {
-    // JTS covers() is closed on the boundary; the arithmetic oracle is
-    // half-open — integer-lattice points land on box edges with prob ~1e-5;
-    // compare against a closed-predicate oracle instead.
-    val ps = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val zs = zones.collect().map(r =>
-      (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-    val closed = (for {
-      (pid, x, y) <- ps; (zid, x0, y0, x1, y1) <- zs
-      if x0 <= x && x <= x1 && y0 <= y && y <= y1
-    } yield (pid, zid)).toSet
-    val got = SpatialJoins.pointInPolygon(pts, zones, ci, 5)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == closed)
-  }
-
-  test("pointInPolygonBroadcast matches the partitioned path") {
-    val a = SpatialJoins.pointInPolygon(pts, zones, ci, 5)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = SpatialJoins.pointInPolygonBroadcast(pts, zones)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b && a.nonEmpty)
-  }
-
-  test("pointInPolygonBroadcastFast (codegen probe) matches the row path") {
-    val a = SpatialJoins.pointInPolygonBroadcast(pts, zones)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = SpatialJoins.pointInPolygonBroadcastFast(pts, zones)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b && b.nonEmpty)
+  test("pointInPolygonBroadcastFast matches a nested-loop JTS covers reference") {
+    val spark2 = spark
+    import spark2.implicits._
+    import org.locationtech.jts.geom.{Coordinate, Polygon}
+    def ring(xy: (Double, Double)*) = JtsGeo.factory.createLinearRing(
+      (xy :+ xy.head).map { case (x, y) => new Coordinate(x, y) }.toArray)
+    // the flagship's overlapping 32-gons, a concave L and a square with a hole
+    val gons = zones.collect().map(r => r.getLong(0) ->
+      JtsGeo.fromWkb(graft.Flagship.zoneGon(
+        r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).asInstanceOf[Polygon])
+    val el = JtsGeo.factory.createPolygon(ring((10000.0, 10000.0), (60000.0, 10000.0),
+      (60000.0, 30000.0), (30000.0, 30000.0), (30000.0, 60000.0), (10000.0, 60000.0)))
+    val holed = JtsGeo.factory.createPolygon(ring((700000.0, 700000.0),
+      (800000.0, 700000.0), (800000.0, 800000.0), (700000.0, 800000.0)),
+      Array(ring((730000.0, 730000.0), (770000.0, 730000.0), (770000.0, 770000.0),
+        (730000.0, 770000.0))))
+    val polys: Seq[(Long, Polygon)] = gons.toSeq ++ Seq(100L -> el, 101L -> holed)
+    // probes: the generated points, every vertex and edge midpoint of every
+    // ring, then the L's notch and the hole's centre
+    val ringPts = for {
+      (_, g) <- polys
+      r <- g.getExteriorRing +: (0 until g.getNumInteriorRing).map(g.getInteriorRingN)
+      Array(c0, c1) <- r.getCoordinates.sliding(2).toSeq
+      xy <- Seq((c0.x, c0.y), ((c0.x + c1.x) / 2, (c0.y + c1.y) / 2))
+    } yield xy
+    val extra = ringPts ++ Seq((45000.0, 45000.0), (750000.0, 750000.0))
+    val probes = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))) ++
+      extra.zipWithIndex.map { case ((x, y), i) => (1000000L + i, x, y) }
+    val (notch, holeCentre) = (1000000L + extra.size - 2, 1000000L + extra.size - 1)
+    val prepared = polys.map { case (id, g) => (id, JtsGeo.prepare(g)) }
+    val ref = for {
+      (pid, x, y) <- probes.toSeq; (zid, pg) <- prepared
+      if pg.covers(JtsGeo.point(x, y))
+    } yield (pid, zid)
+    val got = SpatialJoins.pointInPolygonBroadcastFast(probes.toSeq.toDF("pid", "x", "y"),
+        polys.map { case (id, g) => (id, JtsGeo.toWkb(g)) }.toDF("poly_id", "wkb"))
+      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == got.toSet.size, "duplicate pair emission")
+    assert(got.toSet == ref.toSet)
+    // the fixture exercises boundary hits on every shape, multi-polygon
+    // hits, misses, and misses inside the L's and the holed square's envelopes
+    val at = probes.map(p => p._1 -> JtsGeo.point(p._2, p._3)).toMap
+    val pgOf = prepared.toMap
+    val boundaryPolys = ref.collect { case (pid, zid) if !pgOf(zid).contains(at(pid)) => zid }.toSet
+    assert(Set(100L, 101L).subsetOf(boundaryPolys) && boundaryPolys.exists(_ < 100L),
+      s"boundary hits only on $boundaryPolys")
+    val byPt = ref.groupBy(_._1)
+    assert(byPt.values.exists(_.size > 1), "no multi-polygon hit")
+    assert(probes.exists(p => !byPt.contains(p._1)), "no miss")
+    assert(!ref.contains(notch -> 100L) && !ref.contains(holeCentre -> 101L))
   }
 
   test("pointInBoxSalted output is identical to pointInBox under heavy skew") {
@@ -116,20 +136,11 @@ class SpatialJoinsSpec extends SparkSpec {
     assert(inactive == plain)
   }
 
-  test("envelopeJoin matches brute-force intersects, one row per pair") {
-    val left = zones.select(col("poly_id").as("lid"), col("xmin").as("lxmin"),
-      col("ymin").as("lymin"), col("xmax").as("lxmax"), col("ymax").as("lymax"))
-    val right = zones.select(col("poly_id").as("rid"), col("xmin").as("rxmin"),
-      col("ymin").as("rymin"), col("xmax").as("rxmax"), col("ymax").as("rymax"))
-    val got = SpatialJoins.envelopeJoin(left, right, ci, 5)
-      .select("lid", "rid").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val zs = zones.collect().map(r =>
-      (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-    val expect = (for {
-      (a, ax0, ay0, ax1, ay1) <- zs; (b, bx0, by0, bx1, by1) <- zs
-      if ax0 <= bx1 && bx0 <= ax1 && ay0 <= by1 && by0 <= ay1
-    } yield (a, b)).toSet
-    assert(got.length == got.toSet.size, "duplicate pair emission")
-    assert(got.toSet == expect)
+  test("Flagship.run rejects an unknown variant before reading its input") {
+    val missing = s"${System.getProperty("java.io.tmpdir")}/flagship-missing-${java.util.UUID.randomUUID()}"
+    for (v <- Seq("jts", "jtsFast")) {
+      val e = intercept[IllegalArgumentException](graft.Flagship.run(spark, missing, v))
+      assert(e.getMessage.contains("jtsfast|box"), e.getMessage)
+    }
   }
 }
