@@ -42,7 +42,8 @@ class SimilaritySpec extends SparkSpec {
     assert(got.size == 200)
   }
 
-  test("single-table LSH (annLshBanded, one band) recall@3 is high on clustered data") {
+  test("annLsh recall@3 is high on clustered data") {
+    // Single-table LSH: annLshBanded with one band of six planes.
     val got = Similarity.annLshBanded(emb, "vec_id", "embedding", 3, bands = 1, rowsPerBand = 6)
       .collect().groupBy(_.getLong(0))
       .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
